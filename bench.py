@@ -138,6 +138,15 @@ DRIFT_CONTROL_SQL = (
 )
 
 
+def _warm_up(spark, cat, name: str, warm_dir: str) -> None:
+    """Run one entry into a noop sink on the warm-up SF; a failure only
+    costs the warm-up, so it is logged to stderr and the bench goes on."""
+    try:
+        cat[name].spark_fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
+    except Exception as ex:  # noqa: BLE001 - the timed runs surface real errors
+        print(f"warm-up {name} on {warm_dir} failed: {ex!r}"[:300], file=sys.stderr)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
@@ -160,13 +169,9 @@ def main() -> None:
     # JVM/session warm-up on the smallest SF so the timed queries do not
     # pay classloading/codegen costs that a long-lived cluster never sees;
     # each headline query is warmed so its generated code is JIT'd.
+    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
     for name in names:
-        try:
-            cat[name].spark_fn(spark, "/root/testdata/sf0.001").write.format(
-                "noop"
-            ).mode("overwrite").save()
-        except Exception:
-            pass
+        _warm_up(spark, cat, name, warm_dir)
 
     import duckdb
 
@@ -357,12 +362,7 @@ def main() -> None:
         for name in STREAMING:
             if name not in cat:
                 continue
-            try:
-                cat[name].spark_fn(spark, "/root/testdata/sf0.001").write.format(
-                    "noop"
-                ).mode("overwrite").save()
-            except Exception:
-                pass
+            _warm_up(spark, cat, name, warm_dir)
             s_runs = []
             for _ in range(2):
                 t0 = time.perf_counter()

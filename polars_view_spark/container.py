@@ -7,17 +7,18 @@ returns a NEW container (Spark plans are immutable, so this is free).
 
 Differences from the reference, by design (SURVEY.md §1.1):
 
-- the reference eagerly materializes after every stage; here everything is
-  ONE lazy plan and only ``df_original`` is optionally ``.cache()``d to give
-  the re-query fast path (reference: src/data_container.rs:122-129) a
-  cluster-friendly equivalent;
-- sort-reset (empty criteria) re-derives the view from the cached original
+- the reference eagerly materializes after every stage; here the pipeline
+  is ONE lazy plan over the ``.cache()``d source (the re-query fast path,
+  reference: src/data_container.rs:122-129), pinned once when it carries a
+  row index: the index's eager checkpoint is the view that every page,
+  sort and save reads, and the index is each sort's stable tiebreaker;
+- sort-reset (empty criteria) re-derives the view from the original
   instead of re-reading the file — same observable behavior, no I/O.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -67,23 +68,17 @@ class DataContainer:
 
     def with_sort(self, criteria: list[SortBy]) -> DataContainer:
         """Apply a full criteria vector; empty → reset to the original view
-        (reference empty-criteria rebuild, src/data_container.rs:251-267)."""
+        (reference empty-criteria rebuild, src/data_container.rs:251-267).
+        An indexed view's own index (first column, conflict-resolved name)
+        is the stable tiebreaker: it rises in the view's row order, so no
+        re-index runs and the sort stays lazy."""
         if not criteria:
-            return DataContainer(
-                df=self.df_original,
-                df_original=self.df_original,
-                cfg=self.cfg,
-                loaded_format=self.loaded_format,
-                sort=[],
-                _source=self._source,
-            )
-        return DataContainer(
-            df=apply_sort(self.df_original, criteria),
-            df_original=self.df_original,
-            cfg=self.cfg,
-            loaded_format=self.loaded_format,
+            return replace(self, df=self.df_original, sort=[])
+        index = self.df_original.columns[0] if self.cfg.add_row_index else None
+        return replace(
+            self,
+            df=apply_sort(self.df_original, criteria, tiebreak=index),
             sort=list(criteria),
-            _source=self._source,
         )
 
     def requery(self, spark: SparkSession, cfg: LoadConfig) -> DataContainer:

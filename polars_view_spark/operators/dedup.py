@@ -767,8 +767,9 @@ def minhash_query_index(
         # sizes aggregate).  r11: the persisted ``sizes`` dataset is no
         # longer read here — joining it meant scanning a corpus-sized
         # per-doc table (twice, once per denominator side) where the
-        # candidate-only aggregate touches cached kilobytes; the dataset
-        # stays written for index-format stability and external readers.
+        # candidate-only aggregate touches cached kilobytes.  Since r11 the
+        # dataset is no longer written either; an old index's ``sizes``
+        # directory is ignored.
         # NO corpus-wide aggregate runs at query time either way (the
         # default aggregate sees candidate docs only), keeping the
         # O(|new|) CPU claim honest.

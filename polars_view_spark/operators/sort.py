@@ -5,8 +5,9 @@ Each criterion carries {column, ascending, nulls_last}; precedence is list
 order; the reference sorts with ``maintain_order=true`` (stable).
 
 Spark's distributed sort is NOT stable, so stability is emulated by
-appending a pre-assigned contiguous row index as the final tiebreaker key —
-the documented approach from SURVEY.md §7.4 item 2.  The tiebreaker is only
+appending a contiguous row index as the final tiebreaker key — the
+documented approach from SURVEY.md §7.4 item 2.  A view that already carries
+one (the viewer's pinned index) passes it as ``tiebreak``; otherwise one is
 materialized when ``stable=True`` (the default, to match the reference).
 
 Scale note: ``orderBy`` is a range-partitioned total sort — Spark samples
@@ -32,17 +33,20 @@ def _key(sb: SortBy) -> Column:
     return col.desc_nulls_last() if sb.nulls_last else col.desc_nulls_first()
 
 
-def apply_sort(df: DataFrame, criteria: list[SortBy], stable: bool = True) -> DataFrame:
-    """Sort ``df`` by ``criteria`` in precedence order.
-
-    Empty criteria → ``df`` unchanged (the container handles the
-    rebuild-from-original semantics of the reference's sort reset).
+def apply_sort(
+    df: DataFrame, criteria: list[SortBy], stable: bool = True, tiebreak: str | None = None
+) -> DataFrame:
+    """Sort ``df`` by ``criteria`` in precedence order; ``tiebreak`` names a
+    column rising in ``df``'s row order (a pinned row index) that breaks
+    ties without a re-index.  Empty criteria → ``df`` unchanged (the
+    container handles the rebuild-from-original of the reference's reset).
     """
     if not criteria:
         return df
     keys = [_key(sb) for sb in criteria]
-    if stable:
-        tagged = add_row_index(df, _TIEBREAK, 0)
-        keys.append(F.col(f"`{_TIEBREAK}`").asc())
-        return tagged.orderBy(*keys).drop(_TIEBREAK)
-    return df.orderBy(*keys)
+    if not stable:
+        return df.orderBy(*keys)
+    if tiebreak is not None:
+        return df.orderBy(*keys, F.col(f"`{tiebreak}`").asc())
+    tagged = add_row_index(df, _TIEBREAK, 0)
+    return tagged.orderBy(*keys, F.col(f"`{_TIEBREAK}`").asc()).drop(_TIEBREAK)

@@ -8,9 +8,10 @@ src/data_container.rs:153-190):
     drop-columns → normalize → replace-nulls (always on) → SQL
     → remove-null-columns → add-row-index
 
-Everything composes into ONE lazy plan — unlike the reference, which
-eagerly materializes between stages, Catalyst sees the whole pipeline and
-pushes filters/projections into the file scan.
+Up to SQL everything composes into ONE lazy plan — unlike the reference,
+which eagerly materializes between stages, Catalyst sees the whole pipeline
+and pushes filters/projections into the file scan.  The row index pins the
+view with one eager checkpoint, and the null-column drop rides on it.
 """
 
 from __future__ import annotations
@@ -170,14 +171,17 @@ def build_pipeline(cfg: LoadConfig) -> list[Callable[[DataFrame], DataFrame]]:
     stages.append(lambda df: replace_values_with_null(df, cfg.null_marker_list))
     if cfg.apply_sql and cfg.query.strip():
         stages.append(lambda df: run_sql(df, cfg.query, cfg.table_name))
-    if cfg.exclude_null_cols:
-        stages.append(remove_null_columns)
     if cfg.add_row_index:
         from polars_view_spark.operators.rowindex import add_row_index
 
+        # remove-null-columns rides on the index's aggregate: one pass, not two
         stages.append(
-            lambda df: add_row_index(df, cfg.row_index_name, cfg.row_index_offset)
+            lambda df: add_row_index(
+                df, cfg.row_index_name, cfg.row_index_offset, cfg.exclude_null_cols
+            )
         )
+    elif cfg.exclude_null_cols:
+        stages.append(remove_null_columns)
     return stages
 
 

@@ -2379,6 +2379,33 @@ class TestFingerprintParityFuzz:
         assert not mism, f"{len(mism)} mismatches, e.g. {list(mism.items())[:3]}"
 
 
+class TestPunctCountParity:
+    def test_translate_matches_punct_regex_on_control_chars(self, spark):
+        """quality_score counts punctuation with ``translate`` over the
+        allowed set; that count must equal PUNCT_REGEX's match count for
+        every whitespace control char, U+000B and U+000C included (Spark
+        SQL has no ``\\f`` escape)."""
+        import re
+
+        from polars_view_spark.operators.textstats import (
+            _PUNCT_ALLOWED_SQL,
+            PUNCT_REGEX,
+            _spark_sql_regex,
+        )
+
+        texts = ["ab\x0ccd", "ab\x0bcd", "a\tb\nc\rd e", "f\x0c!?", "x.y,z", ""]
+        df = spark.createDataFrame([(t,) for t in texts], "text string")
+        rows = df.selectExpr(
+            "text",
+            f"length(translate(text, '{_PUNCT_ALLOWED_SQL}', '')) AS by_translate",
+            f"size(regexp_extract_all(text, '{_spark_sql_regex(PUNCT_REGEX)}', 0)) AS by_regex",
+        ).collect()
+        got = {r["text"]: (r["by_translate"], r["by_regex"]) for r in rows}
+        want = {t: (len(re.findall(PUNCT_REGEX, t)),) * 2 for t in texts}
+        assert got == want
+        assert got["ab\x0ccd"] == (0, 0)
+
+
 class TestPiiRedactParityFuzz:
     def test_redaction_cross_engine_on_adversarial_text(self, spark):
         """redact_pii's counts AND masked text must agree across engines

@@ -1,11 +1,31 @@
 """Sort cycle + container lifecycle tests (reference: src/sort.rs:39-61
-5-state cycle, src/data_container.rs:247-309 sort, 122-129 fast path)."""
+5-state cycle, src/data_container.rs:247-309 sort, 122-129 fast path),
+plus the pinned view's job budget and the fused null-column drop."""
+
+import itertools
 
 import pytest
 
 from polars_view_spark.config import LoadConfig, SortBy, SortState
 from polars_view_spark.container import DataContainer
+from polars_view_spark.operators.rowindex import add_row_index
 from polars_view_spark.operators.sort import apply_sort
+from polars_view_spark.operators.transforms import remove_null_columns
+
+_GROUPS = itertools.count()
+
+
+def _jobs(spark, fn):
+    """Run ``fn``; return its result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"job-budget-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 class TestSortCycle:
@@ -113,3 +133,99 @@ class TestContainer:
         c = DataContainer.load_data(spark, LoadConfig(path=csv))
         listing = c.schema_listing()
         assert [(i, n) for i, n, _ in listing] == [(0, "id"), (1, "name"), (2, "v")]
+
+
+class TestPinnedView:
+    """An indexed view is pinned once by the index's checkpoint: sorts,
+    pages and saves read that pin instead of re-indexing or re-broadcasting."""
+
+    @pytest.fixture()
+    def csv(self, tmp_path):
+        p = tmp_path / "view.csv"
+        rows = "".join(f"{i};{i % 7};{i % 3},5;\n" for i in range(2000))
+        p.write_text("id;k;Price EUR;empty\n" + rows)
+        return str(p)
+
+    @pytest.fixture()
+    def cfg(self, csv):
+        return LoadConfig(
+            path=csv,
+            normalize=True,
+            normalize_regex="^.* EUR$",
+            exclude_null_cols=True,
+            apply_sql=True,
+            query="SELECT * FROM AllData",
+            add_row_index=True,
+        )
+
+    def test_sort_and_first_page_job_budget(self, spark, cfg):
+        c = DataContainer.load_data(spark, cfg)
+        assert c.df.columns == ["Row Number", "id", "k", "Price EUR"]
+        _, n = _jobs(spark, lambda: c.df.limit(50).toArrow())
+        assert n == 1
+        s, n = _jobs(spark, lambda: c.with_sort([SortBy("k", ascending=False)]))
+        assert n == 0
+        page, n = _jobs(spark, lambda: s.df.limit(50).toArrow())
+        assert n == 1
+        assert page.num_rows == 50
+
+    def test_requery_job_budget(self, spark, cfg):
+        c = DataContainer.load_data(spark, cfg)
+        q = cfg.with_(query="SELECT id, k, empty FROM AllData WHERE k > 2")
+        c2, n = _jobs(spark, lambda: c.requery(spark, q))
+        assert n <= 3
+        assert c2.df.columns == ["Row Number", "id", "k"]
+
+    def test_conflicted_index_is_the_tiebreaker(self, spark, tmp_path):
+        # the view's own column takes the index name, so the index is
+        # "Row Number_1"; sorting on it must equal a fresh re-index
+        p = tmp_path / "conflict.csv"
+        p.write_text("Row Number;k\n" + "".join(f"{i};{i % 3}\n" for i in range(300)))
+        cfg = LoadConfig(path=str(p), add_row_index=True, exclude_null_cols=True)
+        c = DataContainer.load_data(spark, cfg)
+        assert c.df.columns[0] == "Row Number_1"
+        criteria = [SortBy("k", ascending=False)]
+        pinned = c.with_sort(criteria).df.collect()
+        assert pinned == apply_sort(c.df_original, criteria).collect()
+        assert [r["Row Number"] for r in pinned[:3]] == [2, 5, 8]
+
+
+class TestFusedNullDrop:
+    """``add_row_index(drop_null_cols=True)`` equals remove-null-columns
+    followed by the index, frame for frame."""
+
+    @staticmethod
+    def _same(df, name="Row Number", offset=1):
+        fused = add_row_index(df, name, offset, drop_null_cols=True)
+        unfused = add_row_index(remove_null_columns(df), name, offset)
+        assert fused.columns == unfused.columns
+        assert fused.dtypes == unfused.dtypes
+        assert fused.orderBy(fused.columns[0]).collect() == unfused.orderBy(
+            unfused.columns[0]
+        ).collect()
+        return fused
+
+    def test_zero_rows(self, spark):
+        out = self._same(spark.createDataFrame([], "a int, b string"))
+        assert out.columns == ["Row Number"] and out.count() == 0
+
+    def test_all_null_column(self, spark):
+        df = spark.range(0, 1000, 1, 8).selectExpr(
+            "id", "CASE WHEN id = 999 THEN 'x' END AS rare", "CAST(NULL AS INT) AS gone"
+        )
+        out = self._same(df)
+        assert out.columns == ["Row Number", "id", "rare"]
+
+    def test_every_column_null(self, spark):
+        out = self._same(spark.createDataFrame([(None,), (None,)], "a int"))
+        assert out.columns == ["Row Number"] and out.count() == 0
+
+    def test_all_null_column_named_like_the_index(self, spark):
+        df = spark.createDataFrame([(None, "a"), (None, "b")], "`Row Number` int, v string")
+        out = self._same(df)
+        assert out.columns == ["Row Number", "v"]
+
+    def test_offset_other_than_one(self, spark):
+        df = spark.createDataFrame([(1, None), (2, None), (3, None)], "v int, n int")
+        out = self._same(df, "idx", 100)
+        assert [r["idx"] for r in out.orderBy("idx").collect()] == [100, 101, 102]
