@@ -138,11 +138,19 @@ DRIFT_CONTROL_SQL = (
 )
 
 
+def _noop_run(spark, cat, name: str, sf_dir: str) -> float:
+    """Seconds to build one entry's frame on ``sf_dir`` and materialize it
+    into a noop sink — the one timed unit every bench block repeats."""
+    t0 = time.perf_counter()
+    cat[name].spark_fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
+
+
 def _warm_up(spark, cat, name: str, warm_dir: str) -> None:
     """Run one entry into a noop sink on the warm-up SF; a failure only
     costs the warm-up, so it is logged to stderr and the bench goes on."""
     try:
-        cat[name].spark_fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
+        _noop_run(spark, cat, name, warm_dir)
     except Exception as ex:  # noqa: BLE001 - the timed runs surface real errors
         print(f"warm-up {name} on {warm_dir} failed: {ex!r}"[:300], file=sys.stderr)
 
@@ -196,10 +204,7 @@ def main() -> None:
                 t0 = time.perf_counter()
                 ctrl_con.sql(ctrl_sql).fetchall()
                 ctrl_runs.append(time.perf_counter() - t0)
-            t0 = time.perf_counter()
-            df = cat[name].spark_fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
+            runs.append(_noop_run(spark, cat, name, sf_dir))
         runs.sort()
         timings[name] = round(runs[len(runs) // 2], 4)
         spread[name] = {
@@ -301,13 +306,7 @@ def main() -> None:
                 if name not in timings:
                     # not a headliner: measure its base-SF floor here
                     # (min-of-2, same statistic as the 10× numerator)
-                    base_runs = []
-                    for _ in range(2):
-                        t0 = time.perf_counter()
-                        cat[name].spark_fn(spark, sf_dir).write.format(
-                            "noop"
-                        ).mode("overwrite").save()
-                        base_runs.append(time.perf_counter() - t0)
+                    base_runs = [_noop_run(spark, cat, name, sf_dir) for _ in range(2)]
                     spread[name] = {
                         "n": 2,
                         "min": round(min(base_runs), 4),
@@ -320,14 +319,7 @@ def main() -> None:
                 # the statistic can't one-sidedly discard upward noise in
                 # the numerator while keeping it in the denominator and
                 # bias the ratio toward the favorable conclusion.
-                big_runs = []
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    cat[name].spark_fn(spark, BIG).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    big_runs.append(time.perf_counter() - t0)
-                big = min(big_runs)
+                big = min(_noop_run(spark, cat, name, BIG) for _ in range(2))
                 scaling[name] = {
                     "x10_sec": round(big, 4),
                     "ratio": round(big / spread[name]["min"], 2),
@@ -344,7 +336,7 @@ def main() -> None:
         # frames, shared index-lookup path) but no bench measured them —
         # their wins were invisible to the driver.  This times a
         # representative set END TO END (trigger → checkpointed sink →
-        # read-back), min-of-2 after a sf0.001 warm-up, and records them in
+        # read-back), min-of-3 after a sf0.001 warm-up, and records them in
         # a SIDE block like scaling_x10 — deliberately NOT added to
         # `queries`/`value`, so the headline total stays round-over-round
         # comparable (additions-only contract).
@@ -363,13 +355,7 @@ def main() -> None:
             if name not in cat:
                 continue
             _warm_up(spark, cat, name, warm_dir)
-            s_runs = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                cat[name].spark_fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                s_runs.append(time.perf_counter() - t0)
+            s_runs = [_noop_run(spark, cat, name, sf_dir) for _ in range(3)]
             streaming[name] = {
                 "min": round(min(s_runs), 4),
                 "max": round(max(s_runs), 4),

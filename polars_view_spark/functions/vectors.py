@@ -40,11 +40,6 @@ def cosine_expr(a: str, b: str) -> Column:
     return F.expr(cosine_sql(a, b))
 
 
-def duck_dot_sql(a: str, b: str) -> str:
-    """DuckDB mirror of :func:`dot_sql`."""
-    return f"list_dot_product({a}::DOUBLE[], {b}::DOUBLE[])"
-
-
 def duck_cosine_sql(a: str, b: str) -> str:
     return (
         f"(list_dot_product({a}::DOUBLE[], {b}::DOUBLE[]) / "

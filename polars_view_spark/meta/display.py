@@ -17,7 +17,6 @@ from __future__ import annotations
 import datetime as _dt
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from polars_view_spark.config import Alignment, ViewConfig
 
@@ -84,10 +83,3 @@ def format_page(
             [format_value(v, t, cfg, n) for v, t, n in zip(row, dtypes, df.columns)]
         )
     return rows
-
-
-def format_number_column(df: DataFrame, column: str, decimals: int) -> DataFrame:
-    """In-plane alternative: format a float column as a string with N
-    decimals using JVM-side ``format_number`` (for sinks that want
-    display-formatted output at scale)."""
-    return df.withColumn(column, F.format_number(F.col(column), decimals))

@@ -65,13 +65,6 @@ def salted_join(
     return out.drop("__salt")
 
 
-def repartition_by_key(df: DataFrame, cols: list[str], n: int | None = None) -> DataFrame:
-    """Explicit hash partitioning — pre-shuffle once, reuse the layout for
-    several downstream keyed operations (Catalyst recognizes the
-    partitioning and elides the later exchanges)."""
-    return df.repartition(n, *[F.col(c) for c in cols]) if n else df.repartition(*[F.col(c) for c in cols])
-
-
 def zorder_key_sql(quantized_cols: list[str], bits: int = 16) -> str:
     """SQL expression interleaving the bits of pre-quantized integer
     columns (each already in ``[0, 2^bits)``) into one Z-order (Morton)

@@ -151,76 +151,62 @@ def double_quotes_to_backticks(q: str) -> str:
     return "".join(out)
 
 
-def _find_matching_paren(q: str, open_idx: int) -> int:
-    depth = 0
-    i, n = open_idx, len(q)
+def _code(q: str, start: int = 0, stop: int | None = None):
+    """Yield ``(i, depth)`` for each character of ``q[start:stop]`` outside
+    ``'…'``, ``"…"`` and `` `…` `` regions — the one scanner every
+    structural helper below is built on.  ``depth`` counts the parens
+    opened since ``start``; a paren and its match share the outer depth,
+    so an unmatched ``)`` reads -1."""
+    n = len(q) if stop is None else stop
+    i, depth = start, 0
     while i < n:
         ch = q[i]
         if ch in ("'", '"', "`"):
             i = _scan_string(q, i, ch)
             continue
+        if ch == ")":
+            depth -= 1
+        yield i, depth
         if ch == "(":
             depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i
         i += 1
+
+
+def _kw_at(q: str, i: int, kw: str) -> bool:
+    """Whole-token keyword match at position ``i``."""
+    k = len(kw)
+    return (
+        q[i : i + k].upper() == kw
+        and (i == 0 or not (q[i - 1].isalnum() or q[i - 1] == "_"))
+        and (i + k >= len(q) or not (q[i + k].isalnum() or q[i + k] == "_"))
+    )
+
+
+def _find_matching_paren(q: str, open_idx: int) -> int:
+    for i, depth in _code(q, open_idx):
+        if depth == 0 and q[i] == ")":
+            return i
     raise SqlDialectError("unbalanced parentheses in query")
 
 
 def _split_top_level(s: str, sep: str = ",") -> list[str]:
+    """Split on ``sep`` outside parens, strings and quoted identifiers."""
     parts: list[str] = []
-    depth = 0
-    cur: list[str] = []
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if ch in ("'", '"', "`"):
-            j = _scan_string(s, i, ch)
-            cur.append(s[i:j])
-            i = j
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == sep and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    if cur:
-        parts.append("".join(cur))
+    start = 0
+    for i, depth in _code(s):
+        if depth == 0 and s[i] == sep:
+            parts.append(s[start:i])
+            start = i + 1
+    parts.append(s[start:])
     return [p.strip() for p in parts if p.strip()]
-
-
-_AS_SPLIT = re.compile(r"\s+AS\s+", re.IGNORECASE)
 
 
 def _split_last_as(item: str) -> tuple[str, str]:
     """Split ``expr AS name`` on the LAST top-level AS."""
-    depth = 0
-    i, n = 0, len(item)
     last = -1
-    while i < n:
-        ch = item[i]
-        if ch in ("'", '"', "`"):
-            i = _scan_string(item, i, ch)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and ch in "aA"
-            and re.match(r"AS\b", item[i : i + 3], re.IGNORECASE)
-            and (i == 0 or not (item[i - 1].isalnum() or item[i - 1] in "_`"))
-        ):
+    for i, depth in _code(item):
+        if depth == 0 and _kw_at(item, i, "AS"):
             last = i
-        i += 1
     if last == -1:
         raise SqlDialectError(f"expected 'expr AS name' in modifier item: {item!r}")
     return item[:last].strip(), item[last + 2 :].strip()
@@ -237,17 +223,20 @@ def _quote_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-_STRFTIME_CALL = re.compile(r"\bSTRFTIME\s*\(", re.IGNORECASE)
+_STRFTIME_CALL = re.compile(r"STRFTIME\s*\(", re.IGNORECASE)
 _MODIFIER_KW = re.compile(r"^\s*(EXCEPT|REPLACE|RENAME)\s*\(", re.IGNORECASE)
 
 
 def rewrite_strftime(q: str) -> str:
-    """Rewrite every STRFTIME(expr, 'fmt') call to DATE_FORMAT."""
+    """Rewrite every STRFTIME(expr, 'fmt') call to DATE_FORMAT.  Text
+    inside string literals and quoted identifiers is never rewritten."""
     while True:
-        m = _STRFTIME_CALL.search(q)
-        if m is None:
+        for at, _ in _code(q):
+            if _kw_at(q, at, "STRFTIME") and _STRFTIME_CALL.match(q, at):
+                break
+        else:
             return q
-        open_idx = q.index("(", m.start())
+        open_idx = q.index("(", at)
         close_idx = _find_matching_paren(q, open_idx)
         args = _split_top_level(q[open_idx + 1 : close_idx])
         if len(args) != 2:
@@ -257,7 +246,7 @@ def rewrite_strftime(q: str) -> str:
             raise SqlDialectError("STRFTIME format must be a string literal")
         fmt = fmt_arg[1:-1].replace("''", "'")
         translated = translate_strftime_pattern(fmt).replace("'", "''")
-        q = q[: m.start()] + f"DATE_FORMAT({args[0]}, '{translated}')" + q[close_idx + 1 :]
+        q = q[:at] + f"DATE_FORMAT({args[0]}, '{translated}')" + q[close_idx + 1 :]
 
 
 def _parse_star_modifiers(q: str, star_idx: int):
@@ -294,28 +283,14 @@ def _parse_star_modifiers(q: str, star_idx: int):
 
 def _scan_top_level_keyword(q: str, keywords: tuple[str, ...], start: int = 0) -> int:
     """Index of the first depth-0, outside-string occurrence of any keyword
-    (case-insensitive, word-bounded), or -1."""
-    i, n, depth = start, len(q), 0
-    while i < n:
-        ch = q[i]
-        if ch in ("'", '"', "`"):
-            i = _scan_string(q, i, ch)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0:
-            for kw in keywords:
-                k = len(kw)
-                if (
-                    q[i : i + k].upper() == kw
-                    and (i == 0 or not (q[i - 1].isalnum() or q[i - 1] == "_"))
-                    and (i + k >= n or not (q[i + k].isalnum() or q[i + k] == "_"))
-                ):
-                    return i
-        i += 1
+    (case-insensitive, word-bounded) at or after ``start``, or -1."""
+    for i, depth in _code(q, start):
+        if depth == 0 and any(_kw_at(q, i, kw) for kw in keywords):
+            return i
     return -1
+
+
+_SET_OP_KEYWORDS = ("UNION", "INTERSECT", "EXCEPT", "MINUS")
 
 
 def _scan_top_level_setop(q: str) -> int:
@@ -326,20 +301,10 @@ def _scan_top_level_setop(q: str) -> int:
     rewritten in a later pass)."""
     start = 0
     while True:
-        i = _scan_top_level_keyword(
-            q[start:], ("UNION", "INTERSECT", "EXCEPT", "MINUS")
-        )
-        if i < 0:
-            return -1
-        i += start
-        if q[i : i + 6].upper() == "EXCEPT":
-            j = i - 1
-            while j >= 0 and q[j].isspace():
-                j -= 1
-            if j >= 0 and q[j] == "*":
-                start = i + 6
-                continue
-        return i
+        i = _scan_top_level_keyword(q, _SET_OP_KEYWORDS, start)
+        if i < 0 or not _kw_at(q, i, "EXCEPT") or not q[:i].rstrip().endswith("*"):
+            return i
+        start = i + len("EXCEPT")
 
 
 def rewrite_qualify(q: str) -> str:
@@ -378,7 +343,7 @@ def rewrite_qualify(q: str) -> str:
     # only place a non-set-op EXCEPT can sit at depth 0 — distinguished by
     # the `*` immediately preceding it.
     if (
-        _scan_top_level_keyword(rest, ("UNION", "INTERSECT", "EXCEPT", "MINUS")) >= 0
+        _scan_top_level_keyword(rest, _SET_OP_KEYWORDS) >= 0
         or _scan_top_level_setop(head) >= 0
     ):
         raise SqlDialectError(
@@ -412,30 +377,18 @@ def rewrite_qualify(q: str) -> str:
     )
 
 
+_ORDER_BY = re.compile(r"ORDER\s+BY\b", re.IGNORECASE)
+
+
 def _strip_order_by(q: str) -> str:
     """Remove a top-level ORDER BY … (up to LIMIT/OFFSET or end) — used only
     for the schema-analysis copy, where ORDER BY may reference aliases the
-    modifier-stripped query doesn't have yet."""
-    i, n = 0, len(q)
-    depth = 0
-    while i < n:
-        ch = q[i]
-        if ch in ("'", '"', "`"):
-            i = _scan_string(q, i, ch)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and re.match(r"ORDER\s+BY\b", q[i:], re.IGNORECASE)
-            and (i == 0 or not (q[i - 1].isalnum() or q[i - 1] in "_`"))
-        ):
-            m = re.search(r"\b(LIMIT|OFFSET)\b", q[i:], re.IGNORECASE)
-            end = i + m.start() if m else n
-            return q[:i] + q[end:]
-        i += 1
+    modifier-stripped query doesn't have yet.  The tail keyword counts only
+    outside quotes and at the ORDER BY's own depth."""
+    for i, depth in _code(q):
+        if depth == 0 and _kw_at(q, i, "ORDER") and _ORDER_BY.match(q, i):
+            end = _scan_top_level_keyword(q, ("LIMIT", "OFFSET"), i)
+            return q[:i] + ("" if end < 0 else q[end:])
     return q
 
 
@@ -447,19 +400,8 @@ def _is_select_list_star(q: str, star_idx: int) -> bool:
     keywords that may follow (e.g. the REPLACE *function*) must be left
     alone."""
     j = star_idx - 1
-    while j >= 0:
-        while j >= 0 and q[j].isspace():
-            j -= 1
-        # skip a /*+ hint */ or /* comment */ ending just before the star —
-        # `SELECT /*+ REPARTITION(4) */ * RENAME (…)` is still a select-list
-        # star
-        if j >= 1 and q[j - 1 : j + 1] == "*/":
-            close = q.rfind("/*", 0, j - 1)
-            if close < 0:
-                return False
-            j = close - 1
-            continue
-        break
+    while j >= 0 and q[j].isspace():
+        j -= 1
     if j < 0:
         return False
     if q[j] in (",", "(", "."):
@@ -470,40 +412,17 @@ def _is_select_list_star(q: str, star_idx: int) -> bool:
     return q[j + 1 : end].upper() in ("SELECT", "DISTINCT", "ALL")
 
 
-def _kw_at(q: str, i: int, kw: str) -> bool:
-    """Whole-token keyword match at position ``i``."""
-    k = len(kw)
-    return (
-        q[i : i + k].upper() == kw
-        and (i == 0 or not (q[i - 1].isalnum() or q[i - 1] == "_"))
-        and (i + k >= len(q) or not (q[i + k].isalnum() or q[i + k] == "_"))
-    )
-
-
-_SET_OP_KEYWORDS = ("UNION", "INTERSECT", "EXCEPT", "MINUS")
-
-
 def _modifier_stars(q: str):
     """All select-list stars carrying REPLACE/RENAME modifiers, each as
     ``(depth, star_idx, mod_end, except_src, replace_items, rename_pairs)``."""
     out = []
-    i, n, depth = 0, len(q), 0
-    while i < n:
-        ch = q[i]
-        if ch in ("'", '"', "`"):
-            i = _scan_string(q, i, ch)
+    skip = 0  # end of the last parsed modifier chain
+    for i, depth in _code(q):
+        if i < skip or q[i] != "*" or not _is_select_list_star(q, i):
             continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "*" and _is_select_list_star(q, i):
-            end, except_src, replace_items, rename_pairs = _parse_star_modifiers(q, i)
-            if replace_items or rename_pairs:
-                out.append((depth, i, end, except_src, replace_items, rename_pairs))
-            i = end
-            continue
-        i += 1
+        skip, except_src, replace_items, rename_pairs = _parse_star_modifiers(q, i)
+        if replace_items or rename_pairs:
+            out.append((depth, i, skip, except_src, replace_items, rename_pairs))
     return out
 
 
@@ -520,71 +439,37 @@ def _select_block(q: str, star_idx: int, mod_end: int):
     keyword / closing paren at that depth; a WITH clause opening the
     star's scope is returned as a prefix so ``FROM <cte>`` resolves.
     """
-    # one forward scan to the star: track depth, the current scope's start,
-    # and SELECT positions at the star's depth within that scope
-    star_depth = 0
-    i, depth = 0, 0
-    scope_start = 0
-    select_start = -1
-    first_select_in_scope = -1
-    # first pass to learn the star's depth
-    while i < star_idx:
-        ch = q[i]
-        if ch in ("'", '"', "`"):
-            i = _scan_string(q, i, ch)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        i += 1
-    star_depth = depth
-    i, depth = 0, 0
-    while i < star_idx:
-        ch = q[i]
-        if ch in ("'", '"', "`"):
-            i = _scan_string(q, i, ch)
-            continue
-        if ch == "(":
-            depth += 1
-            if depth == star_depth:
-                scope_start = i + 1
-                select_start = -1
-                first_select_in_scope = -1
-        elif ch == ")":
-            depth -= 1
-        elif depth == star_depth and _kw_at(q, i, "SELECT"):
-            select_start = i
-            if first_select_in_scope < 0:
-                first_select_in_scope = i
-        i += 1
-    if select_start < 0:
+    stack: list[int] = []  # open-paren indices enclosing the star
+    for i, _ in _code(q, 0, star_idx):
+        if q[i] == "(":
+            stack.append(i)
+        elif q[i] == ")":
+            if not stack:
+                raise SqlDialectError("unbalanced parentheses in query")
+            stack.pop()
+    # SELECTs at the star's own depth within its scope
+    scope = stack[-1] + 1 if stack else 0
+    selects = [
+        i for i, depth in _code(q, scope, star_idx)
+        if depth == 0 and _kw_at(q, i, "SELECT")
+    ]
+    if not selects:
         raise SqlDialectError("star modifiers outside any SELECT")
     # block end: from the end of the modifier chain to the scope's close
     # or the next set-op keyword at the star's depth
-    i, n, rel = mod_end, len(q), 0
-    block_end = n
-    while i < n:
-        ch = q[i]
-        if ch in ("'", '"', "`"):
-            i = _scan_string(q, i, ch)
-            continue
-        if ch == "(":
-            rel += 1
-        elif ch == ")":
-            if rel == 0:
-                block_end = i
-                break
-            rel -= 1
-        elif rel == 0 and any(_kw_at(q, i, kw) for kw in _SET_OP_KEYWORDS):
-            block_end = i
-            break
-        i += 1
-    prefix = _enclosing_with_prefix(q, star_idx, first_select_in_scope)
-    return select_start, block_end, prefix
+    block_end = next(
+        (
+            i
+            for i, depth in _code(q, mod_end)
+            if depth < 0
+            or (depth == 0 and any(_kw_at(q, i, kw) for kw in _SET_OP_KEYWORDS))
+        ),
+        len(q),
+    )
+    return selects[-1], block_end, _enclosing_with_prefix(q, stack, selects[0])
 
 
-def _enclosing_with_prefix(q: str, star_idx: int, first_select_in_scope: int) -> str:
+def _enclosing_with_prefix(q: str, stack: list[int], first_select_in_scope: int) -> str:
     """Merged ``WITH …`` prefix of every CTE visible at the star's select
     block — from the star's own scope AND every enclosing scope.
 
@@ -597,20 +482,9 @@ def _enclosing_with_prefix(q: str, star_idx: int, first_select_in_scope: int) ->
     through a subquery, or up to the star's own CTE definition (trailing
     ``name AS`` stripped) when it descends through a CTE body.  Fragments
     are merged outermost-first into a single WITH clause (Spark rejects
-    stacked WITH keywords).
+    stacked WITH keywords).  ``stack`` holds the open-paren indices
+    enclosing the star, outermost first.
     """
-    stack: list[int] = []  # open-paren indices enclosing the star
-    i = 0
-    while i < star_idx:
-        ch = q[i]
-        if ch in ("'", '"', "`"):
-            i = _scan_string(q, i, ch)
-            continue
-        if ch == "(":
-            stack.append(i)
-        elif ch == ")":
-            stack.pop()
-        i += 1
     starts = [0] + [p + 1 for p in stack]
     children = stack + [first_select_in_scope]
     frags: list[str] = []
@@ -645,7 +519,7 @@ def _enclosing_with_prefix(q: str, star_idx: int, first_select_in_scope: int) ->
     # legal statement into a spurious SqlDialectError (ADVICE r04).  Order
     # stays outermost-first so cross-references to earlier CTEs resolve.
     per_frag = [
-        [(_cte_def_name(d), d) for d in _split_top_level_commas(body)]
+        [(_cte_def_name(d), d) for d in _split_top_level(body)]
         for body in frags
     ]
     merged: list[tuple[str, str]] = []
@@ -690,28 +564,6 @@ def _enclosing_with_prefix(q: str, star_idx: int, first_select_in_scope: int) ->
                     "rename one of the CTEs or expand the star manually"
                 )
     return "WITH " + ", ".join(d for _, d in merged) + " "
-
-
-def _split_top_level_commas(text: str) -> list[str]:
-    """Split a WITH-clause body into its CTE definitions: commas inside
-    parens, strings, or quoted identifiers don't separate."""
-    parts: list[str] = []
-    depth, start, i = 0, 0, 0
-    while i < len(text):
-        ch = text[i]
-        if ch in ("'", '"', "`"):
-            i = _scan_string(text, i, ch)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(text[start:i])
-            start = i + 1
-        i += 1
-    parts.append(text[start:])
-    return [p.strip() for p in parts if p.strip()]
 
 
 def _cte_def_name(defn: str) -> str:

@@ -89,10 +89,6 @@ def _read_head_bytes(path: str) -> bytes:
         return fh.read(_PROBE_BYTES)
 
 
-def _probe_head(path: str) -> str:
-    return "\n".join(probe_head_lines(path))
-
-
 def _column_count(text: str, delimiter: str) -> int:
     """Parse up to ROW_LIMIT rows with the csv module; return the minimum
     consistent column count (0 when rows disagree wildly or parsing fails)."""

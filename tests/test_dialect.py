@@ -113,6 +113,10 @@ class TestStarModifiers:
         with pytest.raises(SqlDialectError):
             rewrite_query("SELECT * REPLACE (1 AS nope) FROM AllData", spark)
 
+    def test_unmatched_paren_before_star_is_typed_error(self, spark):
+        with pytest.raises(SqlDialectError, match="unbalanced"):
+            rewrite_query("SELECT id) SELECT * RENAME (id AS k) FROM AllData", spark)
+
     def test_strftime_in_query(self, spark):
         spark.sql("SELECT timestamp'2024-03-05 01:02:03' AS ts").createOrReplaceTempView(
             "T1"
@@ -476,3 +480,53 @@ class TestStarModifierCteScope:
             spark,
         )
         assert [r.asDict() for r in spark.sql(out).collect()] == [{"x": 10, "y": 6}]
+
+
+class TestQuotedTextNeverRewritten:
+    """Quoted text is data, not dialect: STRFTIME inside a literal, a
+    LIMIT/OFFSET word inside a literal or a quoted identifier in the ORDER
+    BY tail, and a keyword directly after a backticked name must all reach
+    Spark with Spark's own meaning.  Each statement matches its plain
+    Spark SQL equivalent row for row."""
+
+    @pytest.fixture(scope="class", autouse=True)
+    def table(self, spark):
+        spark.createDataFrame(
+            [(1, "x", 30), (2, "offset", 20), (3, "y", 10)],
+            "a int, c string, offset int",
+        ).createOrReplaceTempView("QuoteData")
+
+    @pytest.mark.parametrize(
+        "dialect_sql,native_sql",
+        [
+            (
+                "SELECT 'strftime(a, b)' AS s FROM QuoteData",
+                "SELECT 'strftime(a, b)' AS s FROM QuoteData",
+            ),
+            (
+                "SELECT 'use strftime(ts, ''%Y'')' AS hint FROM QuoteData",
+                "SELECT 'use strftime(ts, ''%Y'')' AS hint FROM QuoteData",
+            ),
+            (
+                "SELECT * RENAME (a AS b) FROM QuoteData "
+                "ORDER BY CASE WHEN c = 'offset' THEN 0 ELSE 1 END, a",
+                "SELECT a AS b, c, `offset` FROM QuoteData "
+                "ORDER BY CASE WHEN c = 'offset' THEN 0 ELSE 1 END, a",
+            ),
+            (
+                'SELECT * RENAME (a AS b) FROM QuoteData ORDER BY "offset"',
+                "SELECT a AS b, c, `offset` FROM QuoteData ORDER BY `offset`",
+            ),
+            (
+                "SELECT * RENAME (`a`AS b) FROM QuoteData ORDER BY b",
+                "SELECT a AS b, c, `offset` FROM QuoteData ORDER BY b",
+            ),
+        ],
+        ids=["strftime-literal", "strftime-escaped-literal", "offset-literal",
+             "offset-identifier", "backtick-then-as"],
+    )
+    def test_matches_native(self, spark, dialect_sql, native_sql):
+        got = spark.sql(rewrite_query(dialect_sql, spark))
+        want = spark.sql(native_sql)
+        assert got.columns == want.columns
+        assert got.collect() == want.collect()

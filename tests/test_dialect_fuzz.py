@@ -38,6 +38,20 @@ def test_strftime_rewrite_never_hangs(q):
         pass  # typed error is the contract
 
 
+@settings(max_examples=300, deadline=None)
+@given(
+    st.text(alphabet="ab%Y'(), \"`", max_size=30),
+    st.sampled_from(["strftime(", "STRFTIME(", "StrFTime ("]),
+    st.text(alphabet="ab%Y'(), \"`", max_size=30),
+)
+def test_strftime_inside_literal_untouched(pre, call, post):
+    """A single-quoted literal (quotes escaped by doubling) that spells a
+    STRFTIME call is data: the rewrite returns it byte for byte."""
+    literal = "'" + (pre + call + post).replace("'", "''") + "'"
+    q = f"SELECT {literal} AS s"
+    assert rewrite_strftime(q) == q
+
+
 @settings(max_examples=100, deadline=None)
 @given(st.text(max_size=150))
 def test_full_rewrite_total_without_engine(q):
