@@ -110,6 +110,9 @@ def minhash_signatures(
 
 MAX_LSH_BUCKET = 64  # hot-bucket guard: buckets larger than this are dropped
 
+#: LSH bucket key of a long-form band row: the band id and its row minhashes
+_BUCKET_COLS = ["band"] + [f"v{r}" for r in range(MINHASH_BAND_ROWS)]
+
 
 def _cap_buckets(
     df: DataFrame, bucket_cols: list[str], max_bucket_size: int
@@ -168,9 +171,7 @@ def _band_rows(sigs: DataFrame) -> DataFrame:
         for band in range(n_bands)
     ]
     exploded = sigs.select(F.inline(F.array(*structs)), F.col("doc"))
-    return exploded.select(
-        "band", *[f"v{r}" for r in range(MINHASH_BAND_ROWS)], "doc"
-    )
+    return exploded.select(*_BUCKET_COLS, "doc")
 
 
 def _band_table(sigs: DataFrame, max_bucket_size: int) -> DataFrame:
@@ -183,8 +184,97 @@ def _band_table(sigs: DataFrame, max_bucket_size: int) -> DataFrame:
     bucket-size count shares the join's partitioning (see
     :func:`_cap_buckets`).
     """
-    bucket_cols = ["band"] + [f"v{r}" for r in range(MINHASH_BAND_ROWS)]
-    return _cap_buckets(_band_rows(sigs), bucket_cols, max_bucket_size)
+    return _cap_buckets(_band_rows(sigs), _BUCKET_COLS, max_bucket_size)
+
+
+def _batch_vs_all_sides(
+    sigs: DataFrame, new_ids: DataFrame, max_bucket_size: int
+) -> tuple[DataFrame, DataFrame]:
+    """The two sides of a batch-vs-all candidate join: capped band rows of
+    ``sigs`` restricted to the broadcast ``new_ids`` (left), and all capped
+    band rows (right).  Shared by :func:`minhash_lsh_pairs_incremental`
+    and the union mode of :func:`minhash_query_index`, which build the
+    same union+cap-window subtree from recomputed or persisted
+    signatures."""
+    bands = _band_table(sigs, max_bucket_size)
+    # MERGE hint: both sides derive from the SAME band-table subtree (the
+    # batch side only adds a broadcast id join AFTER the cap window), and a
+    # BroadcastExchange of either side re-runs that subtree — a second
+    # full pass over the corpus band rows — because a broadcast can never
+    # reuse the probe side's shuffle.  Sort-merge keys on the cap window's
+    # band-key hashpartitioning, so the window exchange is computed once
+    # and ReusedExchange feeds the other side; the window's partition-key
+    # sort already satisfies the merge ordering, so no extra sort is paid
+    # either.  At corpus scale the batch side's subtree STILL contains the
+    # corpus-wide union+window, so broadcasting it would cost a full
+    # corpus pass — merge is the only shape that scans the corpus once.
+    return bands.join(F.broadcast(new_ids), "doc"), bands.hint("merge")
+
+
+def _candidate_pairs(left: DataFrame, right: DataFrame, ordered: bool) -> DataFrame:
+    """Cached distinct ``(doc1, doc2)`` candidates, doc1 < doc2, of the
+    band-key join of two ``(band, v0..v{rows-1}, doc)`` frames — the one
+    candidate generator behind every MinHash pairing path.
+
+    ``ordered=True`` is the self-join form (both sides are the same
+    table, so ``l.doc < r.doc`` keeps each pair once); otherwise any two
+    distinct docs pair and the projection orders them.  The result is
+    cached because the verify reads it twice (intersection + left join);
+    the caller unpersists it."""
+    left, right = left.alias("l"), right.alias("r")
+    l_doc, r_doc = F.col("l.doc"), F.col("r.doc")
+    cond = (F.col("l.band") == F.col("r.band")) & (
+        (l_doc < r_doc) if ordered else (l_doc != r_doc)
+    )
+    for r in range(MINHASH_BAND_ROWS):
+        cond = cond & (F.col(f"l.v{r}") == F.col(f"r.v{r}"))
+    if ordered:
+        pair = (l_doc.alias("doc1"), r_doc.alias("doc2"))
+    else:
+        pair = (F.least(l_doc, r_doc).alias("doc1"), F.greatest(l_doc, r_doc).alias("doc2"))
+    return left.join(right, cond).select(*pair).distinct().cache()
+
+
+def _path_exists(spark, path: str) -> bool:
+    """Hadoop-filesystem existence probe (local, HDFS or object store)."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath)
+
+
+def _reject_indexed_ids(
+    op: str, batch: DataFrame, id_col: str, indexed: DataFrame, key: str
+) -> None:
+    """Append guard shared by every persisted index: raise ``ValueError``
+    if ``batch`` repeats an id, or holds an id already in ``indexed``
+    (whose id column is ``key``).  Either would duplicate the id's
+    per-row index state.  The index side reads only its ``key`` column,
+    semi-joined to the broadcast batch ids."""
+    dup = (
+        batch.groupBy(F.col(id_col).alias(key))
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .filter(F.col("__n") > 1)
+        .limit(5)
+        .collect()
+    )
+    if dup:
+        raise ValueError(
+            f"{op}: batch contains duplicate ids (e.g. "
+            f"{sorted(r[key] for r in dup)}) — deduplicate before "
+            f"appending"
+        )
+    new_ids = batch.select(F.col(id_col).alias(key))
+    clash = (
+        indexed.select(key)
+        .join(F.broadcast(new_ids), key, "left_semi")
+        .limit(5)
+        .collect()
+    )
+    if clash:
+        raise ValueError(
+            f"{op}: ids already indexed (e.g. "
+            f"{sorted(r[key] for r in clash)}) — appending would "
+            f"duplicate their rows; deduplicate the batch or rebuild"
+        )
 
 
 def minhash_lsh_pairs(
@@ -260,33 +350,18 @@ def minhash_lsh_pairs(
     # both scales and the checkpoint stays.
     sigs = minhash_signatures(df, id_col, text_col, shingles=sh).cache()
     bands = _band_table(sigs, max_bucket_size)
-
-    left = bands.alias("l")
-    right = bands.alias("r")
-    join_cond = (F.col("l.band") == F.col("r.band")) & (F.col("l.doc") < F.col("r.doc"))
-    for r in range(MINHASH_BAND_ROWS):
-        join_cond = join_cond & (F.col(f"l.v{r}") == F.col(f"r.v{r}"))
-    candidates = (
-        # MERGE hint: a broadcast build side re-runs the band reshape +
-        # cap window (a second shuffle of the band table) because a
-        # BroadcastExchange can never reuse the probe side's shuffle —
-        # and a corpus-scale band table could never broadcast anyway, so
-        # sort-merge is the only join that exists at 100 TB.  (Note: with
-        # sigs CACHED, the two sort-merge sides do NOT collapse into one
-        # ReusedExchange — an InMemoryTableScan defeats AQE's reuse
-        # canonicalization, r10 finding — but both sides' reshape reads
-        # the cache, so only the cheap reshape+window+exchange evaluates
-        # per side, never the minhash aggregate.)
-        left.join(right.hint("merge"), join_cond)
-        .select(F.col("l.doc").alias("doc1"), F.col("r.doc").alias("doc2"))
-        .distinct()
-        .cache()  # reused by intersection + left-join in the verify stage
-    )
-
-    verified = exact_jaccard_for_pairs(df, candidates, id_col, text_col, shingles=sh)
-    result = verified.filter(F.col("jaccard") >= jaccard_threshold).select(
-        "doc1", "doc2", F.round("jaccard", 6).alias("jaccard")
-    )
+    # MERGE hint: a broadcast build side re-runs the band reshape + cap
+    # window (a second shuffle of the band table) because a
+    # BroadcastExchange can never reuse the probe side's shuffle — and a
+    # corpus-scale band table could never broadcast anyway, so sort-merge
+    # is the only join that exists at 100 TB.  (Note: with sigs CACHED,
+    # the two sort-merge sides do NOT collapse into one ReusedExchange —
+    # an InMemoryTableScan defeats AQE's reuse canonicalization, r10
+    # finding — but both sides' reshape reads the cache, so only the cheap
+    # reshape+window+exchange evaluates per side, never the minhash
+    # aggregate.)
+    candidates = _candidate_pairs(bands, bands.hint("merge"), ordered=True)
+    result = exact_jaccard_for_pairs(candidates, sh, jaccard_threshold)
     # pin the (tiny) result, then release the big intermediates (a
     # caller-provided shingle table is the caller's to release)
     result = result.localCheckpoint(eager=True)
@@ -319,48 +394,17 @@ def minhash_lsh_pairs_incremental(
     full = base.unionByName(new)
     sh = shingle_table(full, id_col, text_col).cache()
     # localCheckpoint, NOT cache() — enables exchange reuse across the two
-    # band-table consumers of the merge join below (see minhash_lsh_pairs)
+    # band-table consumers of the merge join (see _batch_vs_all_sides)
     sigs = minhash_signatures(full, id_col, text_col, shingles=sh).localCheckpoint(
         eager=True
     )
-    bands = _band_table(sigs, max_bucket_size)
-
-    new_ids = new.select(F.col(id_col).alias("doc"))
-    bands_new = bands.join(F.broadcast(new_ids), "doc")
-
-    left = bands_new.alias("l")
-    right = bands.alias("r")
-    cond = (F.col("l.band") == F.col("r.band")) & (F.col("l.doc") != F.col("r.doc"))
-    for r in range(MINHASH_BAND_ROWS):
-        cond = cond & (F.col(f"l.v{r}") == F.col(f"r.v{r}"))
-    candidates = (
-        # MERGE hint, same rationale as minhash_lsh_pairs: both sides derive
-        # from the SAME band-table subtree (the batch side only adds a
-        # broadcast id join AFTER the cap window), and a BroadcastExchange
-        # of either side re-runs that subtree — a second full pass over the
-        # corpus band rows — because a broadcast can never reuse the probe
-        # side's shuffle.  Sort-merge keys on the cap window's band-key
-        # hashpartitioning, so the window exchange is computed once and
-        # ReusedExchange feeds the other side; the window's partition-key
-        # sort already satisfies the merge ordering, so no extra sort is
-        # paid either.  At corpus scale the batch side's subtree STILL
-        # contains the corpus-wide union+window, so broadcasting it would
-        # cost a full corpus pass — merge is the only shape that scans the
-        # corpus once.
-        left.join(right.hint("merge"), cond)
-        .select(
-            F.least(F.col("l.doc"), F.col("r.doc")).alias("doc1"),
-            F.greatest(F.col("l.doc"), F.col("r.doc")).alias("doc2"),
-        )
-        .distinct()
-        .cache()
+    left, right = _batch_vs_all_sides(
+        sigs, new.select(F.col(id_col).alias("doc")), max_bucket_size
     )
-
-    verified = exact_jaccard_for_pairs(full, candidates, id_col, text_col, shingles=sh)
-    result = verified.filter(F.col("jaccard") >= jaccard_threshold).select(
-        "doc1", "doc2", F.round("jaccard", 6).alias("jaccard")
+    candidates = _candidate_pairs(left, right, ordered=False)
+    result = exact_jaccard_for_pairs(candidates, sh, jaccard_threshold).localCheckpoint(
+        eager=True
     )
-    result = result.localCheckpoint(eager=True)
     for c in (candidates, sh):
         c.unpersist()
     return result
@@ -378,7 +422,7 @@ def minhash_build_index(
     re-hashes the standing corpus on EVERY daily batch; at 100 TB that
     recompute dwarfs the batch itself).  Mirrors the
     ``ivf_build_index``/``ivf_query_index`` shape
-    (operators/similarity.py:400,454): one offline indexing job, many
+    (operators/similarity.py): one offline indexing job, many
     cheap query jobs that never recompute corpus-side state.
 
     Three parquet datasets under ``path``:
@@ -448,8 +492,7 @@ def minhash_build_index(
             # one aggregate) — NOT a read-back of the just-overwritten
             # signatures path, which raced a stale file listing into a
             # FILE_NOT_EXIST under overwrite-in-place (observed once in CI)
-            bucket_cols = ["band"] + [f"v{r}" for r in range(MINHASH_BAND_ROWS)]
-            _with_bucket_size(_band_rows(sigs), bucket_cols).write.mode(
+            _with_bucket_size(_band_rows(sigs), _BUCKET_COLS).write.mode(
                 "overwrite"
             ).parquet(f"{path}/bands")
 
@@ -508,49 +551,23 @@ def minhash_append_index(
     that would double-append the datasets written before the failure.
     """
     spark = new_docs.sparkSession
-    bands_jpath = spark._jvm.org.apache.hadoop.fs.Path(f"{path}/bands")
-    fs = bands_jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(bands_jpath):
+    if not _path_exists(spark, f"{path}/bands"):
         raise ValueError(
             "minhash_append_index: index has no bands dataset (built "
             "before it existed) — run minhash_refresh_bands(path) once, "
             "then append"
         )
-    dup = (
-        new_docs.groupBy(F.col(id_col).alias("doc"))
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > 1)
-        .limit(5)
-        .collect()
+    _reject_indexed_ids(
+        "minhash_append_index", new_docs, id_col,
+        spark.read.parquet(f"{path}/signatures"), "doc",
     )
-    if dup:
-        raise ValueError(
-            f"minhash_append_index: batch contains duplicate ids (e.g. "
-            f"{sorted(r['doc'] for r in dup)}) — deduplicate before "
-            f"appending"
-        )
-    new_ids = new_docs.select(F.col(id_col).alias("doc"))
-    clash = (
-        spark.read.parquet(f"{path}/signatures")
-        .select("doc")
-        .join(F.broadcast(new_ids), "doc", "left_semi")
-        .limit(5)
-        .collect()
-    )
-    if clash:
-        raise ValueError(
-            f"minhash_append_index: ids already indexed (e.g. "
-            f"{sorted(r['doc'] for r in clash)}) — appending would "
-            f"duplicate their rows; deduplicate the batch or rebuild"
-        )
     sh = shingle_table(new_docs, id_col, text_col).cache()
     try:
         sigs = minhash_signatures(
             new_docs, id_col, text_col, shingles=sh
         ).localCheckpoint(eager=True)
-        bucket_cols = ["band"] + [f"v{r}" for r in range(MINHASH_BAND_ROWS)]
         batch_bands = _band_rows(sigs)
-        batch_keys = batch_bands.select(*bucket_cols).distinct()
+        batch_keys = batch_bands.select(*_BUCKET_COLS).distinct()
 
         # The sigs checkpoint above materialized everything the first
         # two appends need (sh cache filled by the same job), and the
@@ -581,8 +598,8 @@ def minhash_append_index(
             # ARE member counts (one bands row per (band, doc)).
             return (
                 spark.read.parquet(f"{path}/bands")
-                .join(F.broadcast(batch_keys), bucket_cols, "left_semi")
-                .groupBy(*bucket_cols)
+                .join(F.broadcast(batch_keys), _BUCKET_COLS, "left_semi")
+                .groupBy(*_BUCKET_COLS)
                 .agg(F.count(F.lit(1)).alias("__old"))
                 .localCheckpoint(eager=True)
             )
@@ -595,8 +612,8 @@ def minhash_append_index(
             pool.submit(_append_shingles).result()
             existing = existing_fut.result()
         (
-            _with_bucket_size(batch_bands, bucket_cols)
-            .join(existing, bucket_cols, "left")
+            _with_bucket_size(batch_bands, _BUCKET_COLS)
+            .join(existing, _BUCKET_COLS, "left")
             .withColumn(
                 "__bsz", F.col("__bsz") + F.coalesce(F.col("__old"), F.lit(0))
             )
@@ -617,13 +634,12 @@ def minhash_refresh_bands(spark, path: str) -> None:
     matches a fresh rebuild bit-for-bit.  Also materializes ``bands``
     for a legacy index built before the dataset existed.  Reads only
     the (narrow) signatures dataset — never the corpus text."""
-    bucket_cols = ["band"] + [f"v{r}" for r in range(MINHASH_BAND_ROWS)]
     sigs = spark.read.parquet(f"{path}/signatures")
     # stage to a sibling then swap: overwriting bands while deriving it
     # from a DIFFERENT dataset is safe, but a mid-write failure must not
     # leave a half-written bands dir for lookups to read
     tmp = f"{path}/bands__refresh_tmp"
-    _with_bucket_size(_band_rows(sigs), bucket_cols).write.mode(
+    _with_bucket_size(_band_rows(sigs), _BUCKET_COLS).write.mode(
         "overwrite"
     ).parquet(tmp)
     jvm = spark._jvm
@@ -708,18 +724,11 @@ def minhash_query_index(
             # same union the self-contained incremental path computes from
             # scratch — per-doc rows are identical, so downstream is identical
             corpus_sigs = spark.read.parquet(f"{path}/signatures")
-            sigs = corpus_sigs.unionByName(new_sigs)
-            bands = _band_table(sigs, max_bucket_size)
-            new_ids = new.select(F.col(id_col).alias("doc"))
-            left = bands.join(F.broadcast(new_ids), "doc").alias("l")
-            # merge hint: same exchange-reuse rationale as the
-            # minhash_lsh_pairs / incremental self-joins — both sides are
-            # the SAME union+cap-window subtree (the left only adds a
-            # broadcast id join after the window), so sort-merge over the
-            # window's band-key hashpartitioning computes the corpus band
-            # pass ONCE and ReusedExchange feeds the other side, where a
-            # broadcast of either side would re-run the full union+window
-            right = bands.hint("merge").alias("r")
+            left, right = _batch_vs_all_sides(
+                corpus_sigs.unionByName(new_sigs),
+                new.select(F.col(id_col).alias("doc")),
+                max_bucket_size,
+            )
         else:
             # cap from corpus-only bucket sizes: batch contents must not be
             # able to tip a bucket over the cap, or verdicts would depend on
@@ -729,49 +738,32 @@ def minhash_query_index(
             # Indexes written before the bands dataset existed fall back
             # to deriving capped bands from signatures (one window per
             # call — the pre-bands cost, not an error).
-            left = F.broadcast(_band_rows(new_sigs)).alias("l")
-            bands_path = spark._jvm.org.apache.hadoop.fs.Path(f"{path}/bands")
-            fs = bands_path.getFileSystem(spark._jsc.hadoopConfiguration())
-            if fs.exists(bands_path):
+            left = F.broadcast(_band_rows(new_sigs))
+            if _path_exists(spark, f"{path}/bands"):
                 right = (
                     spark.read.parquet(f"{path}/bands")
                     .filter(F.col("__bsz") <= max_bucket_size)
                     .drop("__bsz")
-                    .alias("r")
                 )
             else:
                 right = _band_table(
                     spark.read.parquet(f"{path}/signatures"), max_bucket_size
-                ).alias("r")
-
-        cond = (F.col("l.band") == F.col("r.band")) & (
-            F.col("l.doc") != F.col("r.doc")
-        )
-        for r in range(MINHASH_BAND_ROWS):
-            cond = cond & (F.col(f"l.v{r}") == F.col(f"r.v{r}"))
-        candidates = (
-            left.join(right, cond)
-            .select(
-                F.least(F.col("l.doc"), F.col("r.doc")).alias("doc1"),
-                F.greatest(F.col("l.doc"), F.col("r.doc")).alias("doc2"),
-            )
-            .distinct()
-            .cache()
-        )
+                )
+        candidates = _candidate_pairs(left, right, ordered=False)
 
         # verify touches only candidate docs: semi-join the shingle
         # streams to the (small, broadcast) candidate id set.  The
         # semi-join is DOC-level, so every admitted doc keeps its COMPLETE
         # shingle set — which makes the Jaccard denominators derivable
-        # from this same bounded frame (exact_jaccard_for_pairs' default
-        # sizes aggregate).  r11: the persisted ``sizes`` dataset is no
+        # from this same bounded frame (exact_jaccard_for_pairs' sizes
+        # aggregate).  r11: the persisted ``sizes`` dataset is no
         # longer read here — joining it meant scanning a corpus-sized
         # per-doc table (twice, once per denominator side) where the
         # candidate-only aggregate touches cached kilobytes.  Since r11 the
         # dataset is no longer written either; an old index's ``sizes``
         # directory is ignored.
         # NO corpus-wide aggregate runs at query time either way (the
-        # default aggregate sees candidate docs only), keeping the
+        # sizes aggregate sees candidate docs only), keeping the
         # O(|new|) CPU claim honest.
         cand_docs = (
             candidates.select(F.col("doc1").alias("doc"))
@@ -788,13 +780,7 @@ def minhash_query_index(
             .join(F.broadcast(cand_docs), "doc", "left_semi")
             .cache()
         )
-        # first arg is unused when a shingle table is supplied
-        verified = exact_jaccard_for_pairs(
-            new, candidates, id_col, text_col, shingles=all_sh
-        )
-        result = verified.filter(F.col("jaccard") >= jaccard_threshold).select(
-            "doc1", "doc2", F.round("jaccard", 6).alias("jaccard")
-        )
+        result = exact_jaccard_for_pairs(candidates, all_sh, jaccard_threshold)
         if materialize:
             result = result.localCheckpoint(eager=True)
         return result
@@ -808,33 +794,22 @@ def minhash_query_index(
 
 
 def exact_jaccard_for_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingles: DataFrame | None = None,
-    sizes: DataFrame | None = None,
+    pairs: DataFrame, shingles: DataFrame, threshold: float
 ) -> DataFrame:
-    """Exact shingle Jaccard for given (doc1, doc2) pairs.
+    """Verified ``(doc1, doc2, jaccard)`` rows of candidate ``pairs``:
+    exact shingle Jaccard ≥ ``threshold``, rounded to 6 places.
 
-    Intersection via a 3-way hash join on the exploded shingle table;
-    set sizes via one small aggregate broadcast back.  No list materialization
-    on the driver.
-
-    ``sizes`` (a ``(doc, sz)`` table of FULL per-doc shingle counts) lets
-    an index-backed caller supply precomputed counts — the shingle input
-    may then be pre-filtered to candidate docs without corrupting the
-    Jaccard denominator, and no corpus-wide aggregate runs here.
+    Intersection via a 3-way hash join on the exploded ``(doc, shingle)``
+    table; set sizes via one small aggregate over the same table,
+    broadcast back.  No list materialization on the driver.  The
+    shingle table feeds three consumers (both join sides + sizes), so
+    callers pass a cached one; it may be pre-filtered to candidate docs
+    as long as each admitted doc keeps its complete shingle set (the
+    sizes are the Jaccard denominators).
     """
-    # the shingle table feeds three consumers (both join sides + sizes) —
-    # cache it so the tokenize+shingle scan runs once; callers that already
-    # hold a cached copy pass it in
-    sh = shingles if shingles is not None else shingle_table(df, id_col, text_col).cache()
-    if sizes is None:
-        sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-
-    sh1 = sh.select(F.col("doc").alias("doc1"), F.col("shingle"))
-    sh2 = sh.select(F.col("doc").alias("doc2"), F.col("shingle"))
+    sizes = shingles.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
+    sh1 = shingles.select(F.col("doc").alias("doc1"), F.col("shingle"))
+    sh2 = shingles.select(F.col("doc").alias("doc2"), F.col("shingle"))
     inter = (
         pairs.join(sh1, "doc1")
         .join(sh2, ["doc2", "shingle"])
@@ -842,7 +817,7 @@ def exact_jaccard_for_pairs(
         .agg(F.count(F.lit(1)).alias("inter"))
     )
 
-    return (
+    verified = (
         pairs.join(inter, ["doc1", "doc2"], "left")
         .na.fill({"inter": 0})
         .join(sizes.withColumnRenamed("doc", "doc1").withColumnRenamed("sz", "sz1"), "doc1")
@@ -855,6 +830,9 @@ def exact_jaccard_for_pairs(
                 / (F.col("sz1") + F.col("sz2") - F.col("inter")).cast("double")
             ).alias("jaccard"),
         )
+    )
+    return verified.filter(F.col("jaccard") >= threshold).select(
+        "doc1", "doc2", F.round("jaccard", 6).alias("jaccard")
     )
 
 

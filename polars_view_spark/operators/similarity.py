@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from polars_view_spark.functions.vectors import cosine_sql, lsh_bucket_sql
+from polars_view_spark.operators.dedup import _reject_indexed_ids
 
 
 def _ranked_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -352,45 +353,13 @@ def ivf_flat_topk(
     join, no shuffle of the corpus; candidates reach the scorer through one
     broadcast hash join on the cell id.
     """
+    from polars_view_spark.functions.vectors import dot_sql
+
     cells, _seed_arrays, seed_ints = _seed_centroids(
         corpus, id_col, vec_col, seed_mod, scale, max_seeds
     )
-
-    def with_cells(df: DataFrame) -> DataFrame:
-        # The explicit isnotnull(vec) filter replaces the IsNotNull(cell)
-        # constraint a plain equi-join on `cell` would infer: that inferred
-        # predicate substitutes the WHOLE sorted-cells expression into an
-        # interpreted Filter at the scan (higher-order functions keep it out
-        # of codegen), evaluating the 64-seed assignment twice per corpus
-        # row.  Null vectors never matched the inner join anyway, so the
-        # cheap scan-side filter + the null-safe join below are
-        # semantics-identical and assign cells ONCE (measured 2× at sf0.1).
-        return _with_sorted_cells(
-            df.filter(F.col(vec_col).isNotNull()), vec_col, cells, seed_ints, scale
-        )
-
-    from polars_view_spark.functions.vectors import dot_sql, norm_sql
-
-    # norms hoisted per-row so the candidate stage pays one dot fold, not
-    # three interpreted folds per pair (same doubles — see lsh_topk)
-    assigned = with_cells(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        F.expr(norm_sql(vec_col)).alias("cn"),
-        F.expr("__cells[0]").alias("cell"),
-    )
-
-    # query probes: first n_probe cells of the sorted (dist, cell) array
-    q_cells = (
-        with_cells(queries)
-        .withColumn("__probe", F.expr(f"slice(__cells, 1, {n_probe})"))
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
-            F.expr(norm_sql(vec_col)).alias("qn"),
-            F.explode("__probe").alias("qcell"),
-        )
-    )
+    assigned = _ivf_rows(corpus, id_col, vec_col, cells, seed_ints, scale)
+    q_cells = _ivf_probes(queries, id_col, vec_col, cells, seed_ints, scale, n_probe)
     scored = (
         assigned.join(
             F.broadcast(q_cells), F.col("cell").eqNullSafe(F.col("qcell"))
@@ -402,6 +371,82 @@ def ivf_flat_topk(
         .drop("qvec", "cvec", "cell", "qcell", "qn", "cn")
     )
     return _ranked_topk(scored, k)
+
+
+def _ivf_rows(
+    df: DataFrame, id_col: str, vec_col: str,
+    cells: list[int], seed_ints: list[list[int]], scale: int,
+) -> DataFrame:
+    """``(neighbor_id, cvec, cn, cell)``: each non-null vector with its
+    hoisted norm and nearest seed cell — the IVF corpus row, shared by
+    :func:`ivf_flat_topk` and the persisted build and append so every
+    path assigns a vector to the same cell.
+
+    The explicit isnotnull(vec) filter replaces the IsNotNull(cell)
+    constraint a plain equi-join on ``cell`` would infer: that inferred
+    predicate substitutes the WHOLE sorted-cells expression into an
+    interpreted Filter at the scan (higher-order functions keep it out of
+    codegen), evaluating the 64-seed assignment twice per corpus row.
+    Null vectors never matched the inner join anyway, so the cheap
+    scan-side filter + a null-safe join are semantics-identical and
+    assign cells ONCE (measured 2× at sf0.1).  Norms are hoisted per row
+    so the candidate stage pays one dot fold, not three interpreted folds
+    per pair (same doubles — see lsh_topk)."""
+    from polars_view_spark.functions.vectors import norm_sql
+
+    return _with_sorted_cells(
+        df.filter(F.col(vec_col).isNotNull()), vec_col, cells, seed_ints, scale
+    ).select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("cvec"),
+        F.expr(norm_sql(vec_col)).alias("cn"),
+        F.expr("__cells[0]").alias("cell"),
+    )
+
+
+def _ivf_probes(
+    queries: DataFrame, id_col: str, vec_col: str,
+    cells: list[int], seed_ints: list[list[int]], scale: int, n_probe: int,
+) -> DataFrame:
+    """``(query_id, qvec, qn, qcell)``: one row per non-null query and
+    each of its first ``n_probe`` cells in (distance, cell) order — the
+    probe side shared by :func:`ivf_flat_topk` and
+    :func:`ivf_query_index` (null filter: see :func:`_ivf_rows`)."""
+    from polars_view_spark.functions.vectors import norm_sql
+
+    return (
+        _with_sorted_cells(
+            queries.filter(F.col(vec_col).isNotNull()), vec_col, cells, seed_ints, scale
+        )
+        .withColumn("__probe", F.expr(f"slice(__cells, 1, {n_probe})"))
+        .select(
+            F.col(id_col).alias("query_id"),
+            F.col(vec_col).alias("qvec"),
+            F.expr(norm_sql(vec_col)).alias("qn"),
+            F.explode("__probe").alias("qcell"),
+        )
+    )
+
+
+def _write_centroids(
+    spark, path: str, cells: list[int], seed_ints: list[list[int]]
+) -> None:
+    """Persist the bounded seed-centroid table ``(cell, sv)`` of an IVF
+    or IVF-PQ index under ``path/centroids``."""
+    # one slice up front: createDataFrame on local[N] makes N Python
+    # slices and coalesce(1) evaluates them sequentially in the write
+    # task (~5 s of Python-worker roundtrips at N=32 for a tiny table)
+    spark.createDataFrame(
+        spark.sparkContext.parallelize(list(zip(cells, seed_ints)), numSlices=1),
+        "cell BIGINT, sv ARRAY<BIGINT>",
+    ).write.mode("overwrite").parquet(f"{path}/centroids")
+
+
+def _read_centroids(spark, path: str) -> tuple[list[int], list[list[int]]]:
+    """``(cells, seed_ints)`` of a persisted centroid table, ascending by
+    cell — the only collect an IVF query or append pays."""
+    rows = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
+    return [int(r["cell"]) for r in rows], [[int(x) for x in r["sv"]] for r in rows]
 
 
 def ivf_build_index(
@@ -435,25 +480,8 @@ def ivf_build_index(
     cells, _seed_arrays, seed_ints = _seed_centroids(
         corpus, id_col, vec_col, seed_mod, scale, max_seeds
     )
-    spark = corpus.sparkSession
-    from polars_view_spark.functions.vectors import norm_sql
-
-    # one slice up front: createDataFrame on local[N] makes N Python
-    # slices and coalesce(1) evaluates them sequentially in the write
-    # task (~5 s of Python-worker roundtrips at N=32 for a tiny table)
-    cent = spark.createDataFrame(
-        spark.sparkContext.parallelize(list(zip(cells, seed_ints)), numSlices=1),
-        "cell BIGINT, sv ARRAY<BIGINT>",
-    )
-    cent.write.mode("overwrite").parquet(f"{path}/centroids")
-    assigned = _with_sorted_cells(
-        corpus.filter(F.col(vec_col).isNotNull()), vec_col, cells, seed_ints, scale
-    ).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        F.expr(norm_sql(vec_col)).alias("cn"),
-        F.expr("__cells[0]").alias("cell"),
-    )
+    _write_centroids(corpus.sparkSession, path, cells, seed_ints)
+    assigned = _ivf_rows(corpus, id_col, vec_col, cells, seed_ints, scale)
     # one keyed shuffle so each cell lands in exactly one task → one file
     # per cell directory, instead of numTasks × cells fragments (at real
     # scale swap for repartition(n, "cell") to bound per-file size)
@@ -488,51 +516,13 @@ def ivf_append_index(
     probe) — the index-side check reads only the ``neighbor_id`` column
     against the broadcast batch ids.
     """
-    from polars_view_spark.functions.vectors import norm_sql
-
     spark = new_vectors.sparkSession
-    dup = (
-        new_vectors.groupBy(F.col(id_col).alias("neighbor_id"))
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > 1)
-        .limit(5)
-        .collect()
+    _reject_indexed_ids(
+        "ivf_append_index", new_vectors, id_col,
+        spark.read.parquet(f"{path}/assignments"), "neighbor_id",
     )
-    if dup:
-        raise ValueError(
-            f"ivf_append_index: batch contains duplicate ids (e.g. "
-            f"{sorted(r['neighbor_id'] for r in dup)}) — deduplicate "
-            f"before appending"
-        )
-    new_ids = new_vectors.select(F.col(id_col).alias("neighbor_id"))
-    clash = (
-        spark.read.parquet(f"{path}/assignments")
-        .select("neighbor_id")
-        .join(F.broadcast(new_ids), "neighbor_id", "left_semi")
-        .limit(5)
-        .collect()
-    )
-    if clash:
-        raise ValueError(
-            f"ivf_append_index: ids already indexed (e.g. "
-            f"{sorted(r['neighbor_id'] for r in clash)}) — appending "
-            f"would duplicate their rows; deduplicate the batch or rebuild"
-        )
-    cent_rows = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    cells = [int(r["cell"]) for r in cent_rows]
-    seed_ints = [[int(x) for x in r["sv"]] for r in cent_rows]
-    assigned = _with_sorted_cells(
-        new_vectors.filter(F.col(vec_col).isNotNull()),
-        vec_col,
-        cells,
-        seed_ints,
-        scale,
-    ).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        F.expr(norm_sql(vec_col)).alias("cn"),
-        F.expr("__cells[0]").alias("cell"),
-    )
+    cells, seed_ints = _read_centroids(spark, path)
+    assigned = _ivf_rows(new_vectors, id_col, vec_col, cells, seed_ints, scale)
     assigned.repartition("cell").write.mode("append").partitionBy("cell").parquet(
         f"{path}/assignments"
     )
@@ -558,27 +548,13 @@ def ivf_query_index(
     the probed cells' files are scanned, however large the index is.
     Scores and ranks exactly like :func:`ivf_flat_topk`.
     """
-    from polars_view_spark.functions.vectors import dot_sql, norm_sql
+    from polars_view_spark.functions.vectors import dot_sql
 
-    cent_rows = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    cells = [int(r["cell"]) for r in cent_rows]
-    seed_ints = [[int(x) for x in r["sv"]] for r in cent_rows]
-
+    cells, seed_ints = _read_centroids(spark, path)
     assigned = spark.read.parquet(f"{path}/assignments").withColumn(
         "cell", F.col("cell").cast("long")
     )
-    q_cells = (
-        _with_sorted_cells(
-            queries.filter(F.col(vec_col).isNotNull()), vec_col, cells, seed_ints, scale
-        )
-        .withColumn("__probe", F.expr(f"slice(__cells, 1, {n_probe})"))
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
-            F.expr(norm_sql(vec_col)).alias("qn"),
-            F.explode("__probe").alias("qcell"),
-        )
-    )
+    q_cells = _ivf_probes(queries, id_col, vec_col, cells, seed_ints, scale, n_probe)
     scored = (
         assigned.join(F.broadcast(q_cells), F.col("cell") == F.col("qcell"))
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -933,7 +909,7 @@ def semantic_dedup(
     # null cell never matched), and the NULL-SAFE join below keeps Catalyst
     # from inferring IsNotNull(cell) — which would push the whole 64-seed
     # assignment expression into an interpreted scan-side Filter and
-    # evaluate it twice per row (see ivf_flat_topk.with_cells).
+    # evaluate it twice per row (see _ivf_rows).
     pairable = sized.filter(~F.col("cell_capped") & F.col("v").isNotNull())
     # the quadratic-within-cell verify runs in the shared per-group Arrow
     # kernel — the within-cell pair grid grows with the square of cell
@@ -1884,6 +1860,22 @@ def _pq_adc_topk(
     )
 
 
+def _write_codebook(spark, path: str, seed_ints: list[list[int]]) -> None:
+    """Persist the PQ codeword rows ``(j, sv)`` under ``path/codebook``
+    (one slice: see :func:`_write_centroids`)."""
+    spark.createDataFrame(
+        spark.sparkContext.parallelize(list(enumerate(seed_ints)), numSlices=1),
+        "j INT, sv ARRAY<BIGINT>",
+    ).write.mode("overwrite").parquet(f"{path}/codebook")
+
+
+def _read_codebook(spark, path: str, m_sub: int):
+    """The persisted codebook as the :func:`_pq_books` tensor (codeword j
+    = row j)."""
+    rows = spark.read.parquet(f"{path}/codebook").orderBy("j").collect()
+    return _pq_books([list(r["sv"]) for r in rows], m_sub)
+
+
 def pq_build_index(
     corpus: DataFrame,
     path: str,
@@ -1907,17 +1899,10 @@ def pq_build_index(
     At 100 TB this is the memory-tier index: the codes dataset is ~16
     ints/vector where the raw vectors are 64 floats — query jobs scan
     codes at a fraction of the vector-scan cost and never re-encode."""
-    spark = corpus.sparkSession
     _c, _a, seed_ints = _seed_centroids(
         corpus, id_col, vec_col, seed_mod, scale, k_sub
     )
-    cb = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(j, sv) for j, sv in enumerate(seed_ints)], numSlices=1
-        ),
-        "j INT, sv ARRAY<BIGINT>",
-    )
-    cb.write.mode("overwrite").parquet(f"{path}/codebook")
+    _write_codebook(corpus.sparkSession, path, seed_ints)
     books = _pq_books(seed_ints, m_sub)
     _pq_encode(corpus, id_col, vec_col, books, scale).write.mode(
         "overwrite"
@@ -1940,10 +1925,7 @@ def pq_query_index(
     minhash_query_index economics), and the ADC ranking is the SAME
     helper the in-session path uses, so persisted results reproduce
     pq_topk bit-for-bit (held to the same oracle)."""
-    rows = (
-        spark.read.parquet(f"{path}/codebook").orderBy("j").collect()
-    )
-    books = _pq_books([list(r["sv"]) for r in rows], m_sub)
+    books = _read_codebook(spark, path, m_sub)
     codes = spark.read.parquet(f"{path}/codes")
     return _pq_adc_topk(codes, queries, id_col, vec_col, books, k, scale)
 
@@ -2081,23 +2063,31 @@ def ivfpq_topk(
         _seed_centroids(corpus, id_col, vec_col, pq_seed_mod, scale, k_sub)[2],
         m_sub,
     )
-    pq_codes = _pq_codes_udf(books)
-    pq_dtab = _pq_dtab_udf(books)
-
-    # ONE corpus pass: _with_sorted_cells leaves the quantized vector in
-    # __qv, so cell id and PQ codes come out of the same scan
-    codes = _with_sorted_cells(
-        corpus.filter(F.col(vec_col).isNotNull()), vec_col, cells, ivf_ints, scale
-    ).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.expr("__cells[0]").alias("cell"),
-        pq_codes(F.col("__qv")).alias("codes"),
-    )
+    codes = _ivfpq_code_rows(corpus, id_col, vec_col, cells, ivf_ints, books, scale)
     short = _ivfpq_shortlist(
         codes, queries, id_col, vec_col, cells, ivf_ints, books,
         n_probe, scale, shortlist,
     )
     return _exact_l2_rerank(short, corpus, queries, id_col, vec_col, k, scale)
+
+
+def _ivfpq_code_rows(
+    df: DataFrame, id_col: str, vec_col: str,
+    cells: list[int], ivf_ints: list[list[int]], books, scale: int,
+) -> DataFrame:
+    """``(neighbor_id, cell, codes)``: each non-null vector's nearest IVF
+    cell and PQ codes — the IVF-PQ row, shared by :func:`ivfpq_topk` and
+    the persisted build and append.  ONE pass: ``_with_sorted_cells``
+    leaves the quantized vector in ``__qv``, so cell id and codes come
+    out of the same scan."""
+    pq_codes = _pq_codes_udf(books)
+    return _with_sorted_cells(
+        df.filter(F.col(vec_col).isNotNull()), vec_col, cells, ivf_ints, scale
+    ).select(
+        F.col(id_col).alias("neighbor_id"),
+        F.expr("__cells[0]").alias("cell"),
+        pq_codes(F.col("__qv")).alias("codes"),
+    )
 
 
 def _ivfpq_shortlist(
@@ -2182,27 +2172,10 @@ def ivfpq_build_index(
     _c, _a, pq_ints = _seed_centroids(
         corpus, id_col, vec_col, pq_seed_mod, scale, k_sub
     )
-    cent = spark.createDataFrame(
-        spark.sparkContext.parallelize(list(zip(cells, ivf_ints)), numSlices=1),
-        "cell BIGINT, sv ARRAY<BIGINT>",
-    )
-    cent.write.mode("overwrite").parquet(f"{path}/centroids")
-    cb = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(j, sv) for j, sv in enumerate(pq_ints)], numSlices=1
-        ),
-        "j INT, sv ARRAY<BIGINT>",
-    )
-    cb.write.mode("overwrite").parquet(f"{path}/codebook")
+    _write_centroids(spark, path, cells, ivf_ints)
+    _write_codebook(spark, path, pq_ints)
     books = _pq_books(pq_ints, m_sub)
-    pq_codes = _pq_codes_udf(books)
-    codes = _with_sorted_cells(
-        corpus.filter(F.col(vec_col).isNotNull()), vec_col, cells, ivf_ints, scale
-    ).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.expr("__cells[0]").alias("cell"),
-        pq_codes(F.col("__qv")).alias("codes"),
-    )
+    codes = _ivfpq_code_rows(corpus, id_col, vec_col, cells, ivf_ints, books, scale)
     codes.repartition("cell").write.mode("overwrite").partitionBy("cell").parquet(
         f"{path}/codes"
     )
@@ -2229,11 +2202,8 @@ def ivfpq_query_index(
     re-scanned or re-encoded.  Shares :func:`_ivfpq_shortlist` and
     :func:`_exact_l2_rerank` with the in-session path, so persisted
     results reproduce :func:`ivfpq_topk` bit-for-bit (same oracle)."""
-    cent = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    cells = [int(r["cell"]) for r in cent]
-    ivf_ints = [[int(x) for x in r["sv"]] for r in cent]
-    cb = spark.read.parquet(f"{path}/codebook").orderBy("j").collect()
-    books = _pq_books([list(r["sv"]) for r in cb], m_sub)
+    cells, ivf_ints = _read_centroids(spark, path)
+    books = _read_codebook(spark, path, m_sub)
     codes = spark.read.parquet(f"{path}/codes").select(
         "neighbor_id", F.col("cell").cast("long").alias("cell"), "codes"
     )
@@ -2270,47 +2240,13 @@ def ivfpq_append_index(
     index-side check reads ONLY the ``neighbor_id`` column against the
     broadcast batch ids."""
     spark = new_vectors.sparkSession
-    dup = (
-        new_vectors.groupBy(F.col(id_col).alias("neighbor_id"))
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > 1)
-        .limit(5)
-        .collect()
+    _reject_indexed_ids(
+        "ivfpq_append_index", new_vectors, id_col,
+        spark.read.parquet(f"{path}/codes"), "neighbor_id",
     )
-    if dup:
-        raise ValueError(
-            f"ivfpq_append_index: batch contains duplicate ids (e.g. "
-            f"{sorted(r['neighbor_id'] for r in dup)}) — deduplicate "
-            f"before appending"
-        )
-    new_ids = new_vectors.select(F.col(id_col).alias("neighbor_id"))
-    clash = (
-        spark.read.parquet(f"{path}/codes")
-        .select("neighbor_id")
-        .join(F.broadcast(new_ids), "neighbor_id", "left_semi")
-        .limit(5)
-        .collect()
-    )
-    if clash:
-        raise ValueError(
-            f"ivfpq_append_index: ids already indexed (e.g. "
-            f"{sorted(r['neighbor_id'] for r in clash)}) — appending "
-            f"would duplicate their rows; deduplicate the batch or rebuild"
-        )
-    cent = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    cells = [int(r["cell"]) for r in cent]
-    ivf_ints = [[int(x) for x in r["sv"]] for r in cent]
-    cb = spark.read.parquet(f"{path}/codebook").orderBy("j").collect()
-    books = _pq_books([list(r["sv"]) for r in cb], m_sub)
-    pq_codes = _pq_codes_udf(books)
-    codes = _with_sorted_cells(
-        new_vectors.filter(F.col(vec_col).isNotNull()),
-        vec_col, cells, ivf_ints, scale,
-    ).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.expr("__cells[0]").alias("cell"),
-        pq_codes(F.col("__qv")).alias("codes"),
-    )
+    cells, ivf_ints = _read_centroids(spark, path)
+    books = _read_codebook(spark, path, m_sub)
+    codes = _ivfpq_code_rows(new_vectors, id_col, vec_col, cells, ivf_ints, books, scale)
     codes.repartition("cell").write.mode("append").partitionBy("cell").parquet(
         f"{path}/codes"
     )

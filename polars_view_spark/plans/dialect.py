@@ -88,8 +88,9 @@ def translate_strftime_pattern(fmt: str) -> str:
 
 
 def _scan_string(q: str, i: int, quote: str) -> int:
-    """Return index just past a quoted region starting at ``i`` (q[i]==quote).
-    Doubled quotes escape themselves (SQL style)."""
+    """Return index just past a quoted region starting at ``i`` (q[i]==quote),
+    or ``len(q) + 1`` if the region is unterminated.  Doubled quotes escape
+    themselves (SQL style)."""
     i += 1
     n = len(q)
     while i < n:
@@ -99,7 +100,7 @@ def _scan_string(q: str, i: int, quote: str) -> int:
                 continue
             return i + 1
         i += 1
-    return n
+    return n + 1
 
 
 def strip_comments(q: str) -> str:
@@ -127,7 +128,8 @@ def strip_comments(q: str) -> str:
 
 def double_quotes_to_backticks(q: str) -> str:
     """Rewrite ``"identifier"`` → `` `identifier` `` outside single-quoted
-    strings, matching Polars/ANSI identifier semantics."""
+    strings, matching Polars/ANSI identifier semantics.  An unterminated
+    ``"…`` is copied verbatim, so Spark's parser rejects the statement."""
     out: list[str] = []
     i, n = 0, len(q)
     while i < n:
@@ -142,8 +144,11 @@ def double_quotes_to_backticks(q: str) -> str:
             i = j
         elif ch == '"':
             j = _scan_string(q, i, '"')
-            inner = q[i + 1 : j - 1].replace('""', '"').replace("`", "``")
-            out.append(f"`{inner}`")
+            if j > n:
+                out.append(q[i:])
+            else:
+                inner = q[i + 1 : j - 1].replace('""', '"').replace("`", "``")
+                out.append(f"`{inner}`")
             i = j
         else:
             out.append(ch)
@@ -242,7 +247,7 @@ def rewrite_strftime(q: str) -> str:
         if len(args) != 2:
             raise SqlDialectError(f"STRFTIME expects 2 args, got {len(args)}")
         fmt_arg = args[1].strip()
-        if not (fmt_arg.startswith("'") and fmt_arg.endswith("'")):
+        if not (fmt_arg[:1] == "'" and _scan_string(fmt_arg, 0, "'") == len(fmt_arg)):
             raise SqlDialectError("STRFTIME format must be a string literal")
         fmt = fmt_arg[1:-1].replace("''", "'")
         translated = translate_strftime_pattern(fmt).replace("'", "''")

@@ -637,6 +637,36 @@ class TestIncrementalMinHash:
         )
         assert got == want and len(got) > 0
 
+    @pytest.mark.parametrize("path", ["full", "incremental", "index_union", "index_lookup"])
+    def test_pairing_releases_its_caches(self, spark, documents, tmp_path, path):
+        """Every MinHash pairing path returns its checkpointed result with
+        no cache left behind: shingles, signatures, candidates and the
+        verify's shingle frame are all unpersisted before it returns."""
+        from pyspark.sql import functions as F
+
+        from polars_view_spark.operators.dedup import (
+            minhash_build_index,
+            minhash_lsh_pairs,
+            minhash_lsh_pairs_incremental,
+            minhash_query_index,
+        )
+
+        new = documents.filter(F.col("doc_id") % 10 == 0)
+        base = documents.filter(F.col("doc_id") % 10 != 0)
+        spark.catalog.clearCache()
+        if path == "full":
+            minhash_lsh_pairs(documents, "doc_id", "text", 0.5)
+        elif path == "incremental":
+            minhash_lsh_pairs_incremental(base, new, "doc_id", "text", 0.5)
+        else:
+            idx = str(tmp_path / "mh_idx")
+            minhash_build_index(base, idx, "doc_id", "text")
+            minhash_query_index(
+                spark, new, idx, "doc_id", "text", 0.5,
+                include_batch_pairs=path == "index_union",
+            )
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
 
 class TestSortedNeighborhood:
     def test_hot_cluster_cost_is_linear_not_quadratic(self, spark):

@@ -7,6 +7,7 @@ from polars_view_spark.errors import SqlDialectError
 from polars_view_spark.plans.dialect import (
     double_quotes_to_backticks,
     rewrite_query,
+    rewrite_strftime,
     strip_comments,
     translate_strftime_pattern,
 )
@@ -36,6 +37,19 @@ class TestStrftime:
         with pytest.raises(SqlDialectError):
             translate_strftime_pattern("%Q")
 
+    def test_escaped_quote_format_translates(self):
+        assert (
+            rewrite_strftime("SELECT STRFTIME(ts, '%Y''x') FROM t")
+            == "SELECT DATE_FORMAT(ts, 'yyyy''''x''') FROM t"
+        )
+
+    @pytest.mark.parametrize("fmt", ["'%Y' || '-%m'", "'%Y' || x || '%m'"])
+    def test_format_must_be_one_complete_literal(self, fmt):
+        # a concatenation used to be glued into one literal, printing
+        # ' || ' into every value
+        with pytest.raises(SqlDialectError, match="string literal"):
+            rewrite_strftime(f"SELECT STRFTIME(ts, {fmt}) FROM t")
+
 
 class TestDquote:
     def test_identifier(self):
@@ -47,6 +61,11 @@ class TestDquote:
 
     def test_escaped_dquote(self):
         assert double_quotes_to_backticks('SELECT "a""b" FROM t') == 'SELECT `a"b` FROM t'
+
+    @pytest.mark.parametrize("q", ['SELECT "abc', 'SELECT "ab""', 'SELECT "'])
+    def test_unterminated_copied_verbatim(self, q):
+        # closing it would silently name a shorter column (`ab`)
+        assert double_quotes_to_backticks(q) == q
 
 
 class TestComments:

@@ -65,3 +65,48 @@ def test_no_ghost_entries_in_operators_md():
         if t not in known
     )
     assert not ghosts, f"OPERATORS.md names unregistered entries: {ghosts}"
+
+
+def test_operator_refs_resolve():
+    """Every `file.py:name` reference in OPERATORS.md (``a/b`` lists
+    several names, a ``(…)`` suffix is an argument note) must name a
+    function, class or module-level assignment in a package, script or
+    test file whose path ends with ``file.py`` — a rename without its doc
+    row fails CI instead of leaving a stale pointer."""
+    import ast
+    import re
+
+    defined: dict[str, set[str]] = {}
+    for top in ("polars_view_spark", "scripts", "tests"):
+        for dirpath, _dirs, files in os.walk(os.path.join(REPO, top)):
+            for fn in files:
+                if not fn.endswith(".py"):
+                    continue
+                path = os.path.join(dirpath, fn)
+                with open(path) as fh:
+                    tree = ast.parse(fh.read())
+                names = {
+                    n.name
+                    for n in ast.walk(tree)
+                    if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                }
+                for stmt in tree.body:
+                    targets = (
+                        stmt.targets
+                        if isinstance(stmt, ast.Assign)
+                        else [stmt.target] if isinstance(stmt, ast.AnnAssign) else []
+                    )
+                    names.update(t.id for t in targets if isinstance(t, ast.Name))
+                defined[os.path.relpath(path, REPO)] = names
+
+    with open(os.path.join(REPO, "OPERATORS.md")) as fh:
+        doc = fh.read()
+    refs = re.findall(r"`([\w/]+\.py):([\w/]+)(?:\([^`]*\))?`", doc)
+    assert refs, "no file.py:name references found in OPERATORS.md"
+    stale = []
+    for file, names in refs:
+        modules = [m for p, m in defined.items() if p == file or p.endswith("/" + file)]
+        for name in names.split("/"):
+            if not any(name in m for m in modules):
+                stale.append(f"{file}:{name}")
+    assert not stale, f"OPERATORS.md references that resolve to nothing: {sorted(set(stale))}"
